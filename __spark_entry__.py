@@ -1094,12 +1094,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "community_modularity": _q_community_modularity,
         "temporal_reachability": _q_temporal_reachability,
         "degree_assortativity": _q_degree_assortativity,
-        # NOTE: the MLlib MinHashLSH/BRP variants (operators.mllib_lsh) are
-        # deliberately NOT registered: approxSimilarityJoin on this corpus
-        # (word-soup docs where most pairs collide in some hash table) is
-        # >40× slower than the hand-rolled banded MinHash registered above,
-        # which covers the same capability in the driver contract. They
-        # remain tested library operators (tests/test_mllib_variants.py).
     }
     for suite in _SUITES:
         for name, (fn, _sql) in suite.items():

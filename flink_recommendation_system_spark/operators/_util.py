@@ -32,38 +32,16 @@ def spread_small_scan(df: DataFrame) -> DataFrame:
     return df
 
 
-# Size-aware pin floor (round 17, VERDICT r16 item 1): bytes of estimated
-# relation per pinned partition. A pinned partition below this size holds
-# too little data for ANY per-row work to amortize its task launch, so
-# relations estimated under target × defaultParallelism bytes get
-# proportionally fewer partitions (floor 1). The default is deliberately
-# SMALL (4 KB): the pin exists for small-but-CPU-HOT relations (round-7
-# measurements below), whose per-row cost dwarfs their bytes — e.g. the
-# 150 KB sf0.1 MinHash signature table genuinely saturates 32 cores in
-# its verify stage (driver-measured 8→32-core speedup 3.6×), so only
-# relations in the low-hundreds-of-rows class (entity representatives,
-# Markov journeys) should ever shrink. Production override:
-# SPARK_GRAFT_PIN_TARGET_BYTES. At 100 TB every pinned relation exceeds
-# target × parallelism and the count is defaultParallelism, unchanged.
-PIN_TARGET_BYTES = 4 * 1024
-
-
 def pin_layout(df: DataFrame, *cols: str) -> DataFrame:
-    """Pin ``df``'s layout hashed on ``cols`` — the repartition AQE
-    RESPECTS (explicit partition counts are never coalesced), where AQE's
-    size-based post-shuffle coalescing would collapse a small-but-CPU-hot
-    relation to one partition and serialize every downstream join/verify
-    stage on one core (round-7 measurements: FastSS verification 7.5 s →
-    1.5 s, MinHash verify 5.8 → 2.4, co-review pair expansion 2.5 → 0.4).
-    At real scale the relation exceeds the advisory size and the exchange
-    is the same one the downstream equi-join needs anyway.
-
-    Partition count (round 17, guide §2.2/§5): size-aware —
-    ``clamp(ceil(est_bytes / PIN_TARGET_BYTES), 1, defaultParallelism)``
-    from the optimizer's plan-statistics estimate (metadata only, no
-    job), so metadata-sized relations stop paying defaultParallelism
-    task launches per downstream stage while everything big enough to
-    matter keeps full parallelism. Estimate unavailable → full count.
+    """Pin ``df``'s layout hashed on ``cols`` into ``defaultParallelism``
+    partitions — the repartition AQE RESPECTS (explicit partition counts
+    are never coalesced), where AQE's size-based post-shuffle coalescing
+    would collapse a small-but-CPU-hot relation to one partition and
+    serialize every downstream join/verify stage on one core (round-7
+    measurements: FastSS verification 7.5 s → 1.5 s, MinHash verify 5.8 →
+    2.4, co-review pair expansion 2.5 → 0.4). At real scale the relation
+    exceeds the advisory size and the exchange is the same one the
+    downstream equi-join needs anyway.
 
     The except guard exists ONLY for Spark Connect, where ``sparkContext``
     is unavailable — column-name errors must still surface, so the
@@ -72,22 +50,7 @@ def pin_layout(df: DataFrame, *cols: str) -> DataFrame:
         par = df.sparkSession.sparkContext.defaultParallelism
     except Exception:
         return df  # Spark Connect: no sparkContext — keep planner layout
-    n = max(par, 1)
-    try:
-        import math
-        import os
-
-        target = int(
-            os.environ.get("SPARK_GRAFT_PIN_TARGET_BYTES", PIN_TARGET_BYTES)
-        )
-        est = int(
-            df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-        )
-        if est > 0 and target > 0:
-            n = max(1, min(n, math.ceil(est / target)))
-    except Exception:
-        pass  # no estimate (e.g. Connect-like API gaps) → full parallelism
-    return df.repartition(n, *cols)
+    return df.repartition(par, *cols)
 
 
 def md5_half_hashes(key):

@@ -1,18 +1,40 @@
 """Similarity search over embedding columns (SURVEY.md §7 M4).
 
-Two tiers, as a 100 TB pipeline needs:
+Top-k search:
 
 - ``cosine_topk``: exact brute-force top-k — the correctness baseline and
   the re-rank stage. Dot products via `zip_with`/`aggregate` (JVM higher-
   order functions, no Python). The query set is broadcast; the corpus is
   never shuffled — each partition scores its slice and a global
   TakeOrdered merges per-query heaps.
-- ``lsh_topk``: sign-random-projection LSH bucketing (deterministic seeded
-  hyperplanes) + exact re-rank within buckets — the approximate scale path:
-  candidate generation is an equi-join on bucket signature, turning
-  O(Q×N) into O(Q×bucket).
+- ``lsh_topk`` / ``srp_banded_topk`` / ``ivf_probe`` / ``ivf_probe_fixed``:
+  candidate generation (SRP buckets, IVF cells) + exact cosine re-rank —
+  the approximate scale paths, turning O(Q×N) into O(Q×candidates).
+- ``pq_topk`` / ``pq_adc_topk``: product-quantization distance ranking.
 
-Embeddings are `array<float>`; all math is done in double.
+Every cosine score is ``_cosine6``: ``round(a·b / (‖a‖‖b‖), 6)`` — the
+expression the SQL oracles mirror bit-for-bit.
+
+SemDeDup (Abbas et al. 2023) is ONE filter-and-refine skeleton:
+``_semdedup_keep`` pairs ids that share a cell, verifies each candidate
+pair with ``_cosine6 ≥ threshold`` (``_verified_pairs``), drops the higher
+id of every verified pair and anti-joins the drops away, so the min id of
+each semantic group survives. The tiers differ only in the cell-assignment
+step they hand it:
+
+- ``semantic_dedup``: KMeans cells (``ivf_fit``) over L2-normalized
+  vectors; verifies on the unit vectors; rows-only.
+- ``semantic_dedup_fixed``: nearest of ``n_clusters`` fixed grid
+  centroids (``ivf_cell_assignments`` at probe 1); zero vectors sit in
+  their ``zcell``. The registered ``semantic_dedup_sqrt`` query runs this
+  tier at ⌊√N⌋ cells.
+- ``semantic_dedup_ann``: banded SRP, one cell per (band, bucket).
+- ``semantic_dedup_ivf``: multi-probe IVF cells on fixed grid centroids.
+- ``semantic_dedup_ivf_refit``: multi-probe IVF cells on Lloyd-refit
+  centroids (``ivf_refit_centroids``).
+
+``incremental_semantic_pairs`` reuses the same verify step for the
+streaming tier. Embeddings are `array<float>`; all math is done in double.
 """
 
 from __future__ import annotations
@@ -45,6 +67,67 @@ def cosine(a: Column, b: Column) -> Column:
     return _dot(a, b) / (_norm(a) * _norm(b))
 
 
+def _cosine6(a: str, b: str) -> Column:
+    """THE engine cosine — every score, re-rank and SemDeDup verify in
+    this module: ``round(a._v·b._v / (a._n·b._n), 6)`` between two
+    ``_vecs``-shaped relations aliased ``a`` and ``b`` in a join. Rounded
+    before any threshold or ranking, so results do not depend on summation
+    order; the SQL oracles spell the same expression. Callers keep zero
+    vectors out of its operands: cosine against them is undefined, and
+    ANSI mode raises DIVIDE_BY_ZERO."""
+    return F.round(
+        _dot(F.col(f"{a}._v"), F.col(f"{b}._v"))
+        / (F.col(f"{a}._n") * F.col(f"{b}._n")),
+        6,
+    )
+
+
+def _vecs(
+    df: DataFrame, id_as: str, id_col: str, vec_col: str, *extra: Column
+) -> DataFrame:
+    """(``id_as``, _v ARRAY<DOUBLE>, _n, *extra) — the operand relation of
+    ``_cosine6``, norms computed once per vector. Widening to double once
+    here is exact (scores are bit-identical to the float vectors) and
+    spares the per-pair dot product an interpreted cast per element."""
+    v = F.col(vec_col).cast("array<double>")
+    return df.select(
+        F.col(id_col).alias(id_as), v.alias("_v"), _norm(v).alias("_n"), *extra
+    )
+
+
+def _scored(cand: DataFrame, q: DataFrame, c: DataFrame) -> DataFrame:
+    """Exact re-rank of (query_id, neighbor_id) candidates against the
+    broadcast query side ``q`` and the corpus side ``c`` (``_vecs``
+    relations keyed query_id / neighbor_id; their extra columns ride
+    along): (query_id, neighbor_id, *extra, cosine_sim)."""
+    extra = [
+        x
+        for x in q.columns + c.columns
+        if x not in ("query_id", "neighbor_id", "_v", "_n")
+    ]
+    return (
+        cand.join(F.broadcast(q.alias("q")), "query_id")
+        .join(c.alias("c"), "neighbor_id")
+        .select(
+            "query_id",
+            "neighbor_id",
+            *extra,
+            _cosine6("q", "c").alias("cosine_sim"),
+        )
+    )
+
+
+def _topk(scored: DataFrame, k: int) -> DataFrame:
+    """Per-query top-k of (query_id, neighbor_id, cosine_sim) rows, ranked
+    (cosine_sim DESC, neighbor_id ASC) — deterministic across engines."""
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("cosine_sim").desc(), F.col("neighbor_id").asc()
+    )
+    return scored.withColumn("rank", F.row_number().over(w).cast("long")).filter(
+        F.col("rank") <= k
+    )
+
+
 def cosine_topk(
     queries: DataFrame,
     corpus: DataFrame,
@@ -58,23 +141,13 @@ def cosine_topk(
     self-matches. Deterministic: rounds the score to 6 dp *before* ranking
     and breaks ties on neighbor_id, so the result is engine-independent.
     """
-    # Norms are computed once per vector, not once per pair — the pair
-    # scoring then costs a single dot product.
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("q_vec"),
-        _norm(F.col(vec_col)).alias("q_norm"),
-    )
     # The corpus side drives parallelism of the broadcast nested-loop join;
     # a small parquet file scans as 1 partition, which would serialize the
     # whole O(Q×N) scoring on one core — spread it first. (At real scale
     # the corpus is many splits and this is a no-op cost-wise.)
     par = corpus.sparkSession.sparkContext.defaultParallelism
-    c = corpus.repartition(par).select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("c_vec"),
-        _norm(F.col(vec_col)).alias("c_norm"),
-    )
+    q = _vecs(queries, "query_id", id_col, vec_col).alias("q")
+    c = _vecs(corpus.repartition(par), "neighbor_id", id_col, vec_col).alias("c")
     # Broadcast the (small) query side and stream the corpus past it; the
     # corpus never shuffles. crossJoin(broadcast) → BroadcastNestedLoopJoin.
     scored = (
@@ -83,20 +156,10 @@ def cosine_topk(
         .select(
             "query_id",
             "neighbor_id",
-            F.round(
-                _dot(F.col("q_vec"), F.col("c_vec"))
-                / (F.col("q_norm") * F.col("c_norm")),
-                6,
-            ).alias("cosine_sim"),
+            _cosine6("q", "c").alias("cosine_sim"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine_sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-    )
+    return _topk(scored, k)
 
 
 # --- deterministic sign-random-projection LSH -------------------------------
@@ -144,39 +207,20 @@ def lsh_topk(
     """Approximate cosine top-k: SRP-bucket join then exact re-rank within
     the bucket. Recall < 1 by design; pair with ``cosine_topk`` on samples
     to validate. Same output shape as ``cosine_topk``."""
-    planes = _hyperplanes(dim, n_planes)
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("q_vec"),
-        _norm(F.col(vec_col)).alias("q_norm"),
-        srp_signature(F.col(vec_col), planes).alias("bucket"),
-    )
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("c_vec"),
-        _norm(F.col(vec_col)).alias("c_norm"),
-        srp_signature(F.col(vec_col), planes).alias("bucket"),
-    )
+    sig = srp_signature(F.col(vec_col), _hyperplanes(dim, n_planes))
+    q = _vecs(queries, "query_id", id_col, vec_col, sig.alias("bucket"))
+    c = _vecs(corpus, "neighbor_id", id_col, vec_col, sig.alias("bucket"))
     scored = (
-        q.join(c, "bucket")
+        q.alias("q")
+        .join(c.alias("c"), "bucket")
         .filter(F.col("query_id") != F.col("neighbor_id"))
         .select(
             "query_id",
             "neighbor_id",
-            F.round(
-                _dot(F.col("q_vec"), F.col("c_vec"))
-                / (F.col("q_norm") * F.col("c_norm")),
-                6,
-            ).alias("cosine_sim"),
+            _cosine6("q", "c").alias("cosine_sim"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine_sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-    )
+    return _topk(scored, k)
 
 
 class IVFIndex:
@@ -185,7 +229,8 @@ class IVFIndex:
     the served-ANN shape (in production the assignment lives as a parquet
     table partitioned by cell and the centroids as a broadcast side file;
     re-fitting per query, as the old single-call API did, throws away the
-    expensive KMeans pass)."""
+    expensive KMeans pass). ``assigned`` is (neighbor_id, _v, _n, cell) —
+    ``_vecs``-shaped, so ``_cosine6`` scores it directly."""
 
     def __init__(self, assigned: DataFrame, centroids: DataFrame):
         self.assigned = assigned
@@ -220,8 +265,8 @@ def ivf_fit(
     spark = corpus.sparkSession
     feats = corpus.select(
         F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("c_vec"),
-        _norm(F.col(vec_col)).alias("c_norm"),
+        F.col(vec_col).alias("_v"),
+        _norm(F.col(vec_col)).alias("_n"),
         array_to_vector(F.col(vec_col).cast("array<double>")).alias("features"),
     )
     train = (
@@ -244,7 +289,7 @@ def ivf_fit(
     model = km.fit(train)
     assigned = (
         model.transform(feats)
-        .select("neighbor_id", "c_vec", "c_norm", "cell")
+        .select("neighbor_id", "_v", "_n", "cell")
         .localCheckpoint()
     )
     centroids = spark.createDataFrame(
@@ -274,44 +319,24 @@ def ivf_probe(
     fraction of the corpus) instead of O(N). Same output columns as
     ``cosine_topk``."""
     assigned, centroids = index.assigned, index.centroids
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("q_vec"),
-        _norm(F.col(vec_col)).alias("q_norm"),
-    )
+    q = _vecs(queries, "query_id", id_col, vec_col)
     probe_w = Window.partitionBy("query_id").orderBy(
         F.col("centroid_dist").asc(), F.col("cell").asc()
     )
     probes = (
         q.crossJoin(F.broadcast(centroids))
-        .withColumn(
-            "centroid_dist",
-            _l2sq(F.col("q_vec").cast("array<double>"), F.col("centroid")),
-        )
+        .withColumn("centroid_dist", _l2sq(F.col("_v"), F.col("centroid")))
         .withColumn("_rn", F.row_number().over(probe_w))
         .filter(F.col("_rn") <= n_probe)
-        .select("query_id", "q_vec", "q_norm", "cell")
+        .select("query_id", "_v", "_n", "cell")
     )
     scored = (
-        probes.join(assigned, "cell")
+        probes.alias("q")
+        .join(assigned.alias("c"), "cell")
         .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(
-                _dot(F.col("q_vec"), F.col("c_vec"))
-                / (F.col("q_norm") * F.col("c_norm")),
-                6,
-            ).alias("cosine_sim"),
-        )
+        .select("query_id", "neighbor_id", _cosine6("q", "c").alias("cosine_sim"))
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine_sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-    )
+    return _topk(scored, k)
 
 
 def ivf_topk(
@@ -331,6 +356,71 @@ def ivf_topk(
     return ivf_probe(index, queries, k, n_probe, id_col, vec_col)
 
 
+# --- SemDeDup: one filter-and-refine skeleton ------------------------------
+
+
+def _verified_pairs(cand: DataFrame, vecs: DataFrame, threshold: float) -> DataFrame:
+    """The refine step: (id_a, id_b) candidate pairs whose ``_cosine6``
+    over ``vecs`` (a ``_vecs`` relation keyed ``_id``) is ≥ ``threshold``,
+    as (id_a, id_b, cosine)."""
+    return (
+        cand.join(vecs.withColumnRenamed("_id", "id_a").alias("a"), "id_a")
+        .join(vecs.withColumnRenamed("_id", "id_b").alias("b"), "id_b")
+        .withColumn("cosine", _cosine6("a", "b"))
+        .filter(F.col("cosine") >= threshold)
+        .select("id_a", "id_b", "cosine")
+    )
+
+
+def _semdedup_keep(
+    cells: DataFrame,
+    vecs: DataFrame,
+    threshold: float,
+    id_col: str,
+    multi_cell: bool,
+    keep: DataFrame | None = None,
+) -> DataFrame:
+    """THE SemDeDup keep/drop tail every tier shares. ``cells`` (_id, cell)
+    is the tier's cell assignment of its NON-ZERO vectors — a vector may
+    sit in several cells (multi-probe IVF, SRP bands); zero vectors have
+    no direction, are never paired, and survive through ``keep``.
+    ``vecs`` (``_vecs``, keyed _id) holds what the cosine verifies on.
+    Two vectors are compared iff they share a cell; each verified pair
+    drops its higher id, so the min id of every semantic group survives.
+    Returns ``keep`` (default: every id of ``vecs``) minus the dropped
+    ids, with ``_id`` renamed to ``id_col``. ``multi_cell`` says whether a
+    vector can sit in more than one cell, so a pair can repeat.
+
+    The within-cell pair join is the only superlinear step: Σ|cell|²
+    candidates, bounded by how each tier sizes its cells."""
+    cand = (
+        cells.alias("a")
+        .join(
+            cells.alias("b"),
+            (F.col("a.cell") == F.col("b.cell"))
+            & (F.col("a._id") < F.col("b._id")),
+        )
+        .select(F.col("a._id").alias("id_a"), F.col("b._id").alias("id_b"))
+    )
+    if multi_cell:
+        # distinct BEFORE the vector joins: multi-probe repeats a pair up
+        # to n_probe×, and the id-only distinct is a cheap shuffle next to
+        # the 64-dim cosine on repeated (and cell-skewed) pairs (measured:
+        # carrying the vectors into the pair join instead = 16.7 s vs 7.7 s
+        # at sf0.1). With one cell per vector every pair is already unique
+        # and the shuffle is pure cost (KMeans tier, sf0.1, 4 cores: 2.3 → 3.2 s).
+        cand = cand.distinct()
+    dropped = (
+        _verified_pairs(cand, vecs, threshold)
+        .select(F.col("id_b").alias("_id"))
+        .distinct()
+    )
+    keep = vecs.select("_id") if keep is None else keep
+    return keep.join(dropped, "_id", "left_anti").withColumnRenamed(
+        "_id", id_col
+    )
+
+
 def semantic_dedup(
     vectors: DataFrame,
     n_clusters: int = 16,
@@ -340,27 +430,25 @@ def semantic_dedup(
     kmeans_max_iter: int = 4,
 ) -> DataFrame:
     """SemDeDup-style semantic deduplication (Abbas et al. 2023,
-    arXiv:2303.09540): KMeans-cluster the embeddings, then WITHIN each
-    cluster drop every vector whose cosine similarity to a lower-id
-    cluster member is ≥ ``threshold``; the minimum id of each semantic
-    group survives. Output: the kept rows as (vec_id, cell).
+    arXiv:2303.09540). Cell assignment: KMeans clusters of the
+    L2-normalized embeddings (``ivf_fit``); the ``_semdedup_keep``
+    skeleton then drops, within each cluster, every vector whose cosine
+    to a lower-id member is ≥ ``threshold`` — verified on the unit
+    vectors. Output: the kept rows as (vec_id, cell).
 
-    Scale shape — clusters bound the quadratic: the paper's design point
-    is that the within-cluster pair join is the ONLY superlinear step, and
-    its cost is Σ|cluster|² — controlled by scaling ``n_clusters`` with
-    the corpus (FAISS-style √N clusters keeps expected cluster size √N).
-    The KMeans fit reuses ``ivf_fit``'s sampled/loose-convergence recipe;
+    Scale shape — clusters bound the quadratic: the within-cluster pair
+    join costs Σ|cluster|², controlled by scaling ``n_clusters`` with the
+    corpus (FAISS-style √N clusters keeps expected cluster size √N). The
+    KMeans fit reuses ``ivf_fit``'s sampled/loose-convergence recipe;
     cell assignment is one broadcast-centroid transform. Not
     SQL-expressible (iterative KMeans) → rows-only driver check; the
-    semantic invariants (planted duplicates collapse, singletons survive,
-    min-id wins) are pinned in tests/test_round4_ops.py.
+    tier contract is pinned in tests/test_llm_ops.py.
 
     Clustering runs on L2-NORMALIZED vectors (the paper's setup): the dedup
     criterion is cosine — magnitude-invariant — so clustering raw vectors
     would let two scaled copies of the same direction land in different
-    cells and silently miss. Zero vectors pass through un-normalized (they
-    have no direction; cosine against them is undefined and never ≥
-    threshold).
+    cells and silently miss. Zero vectors pass through un-normalized and
+    are kept (they have no direction; cosine against them is undefined).
     """
     norm = _norm(F.col(vec_col))
     unit = vectors.select(
@@ -379,39 +467,20 @@ def semantic_dedup(
     # dominant term on small corpora (measured: fit 6.8 s of the 8 s query
     # at sf0.1), so the cheaper quantizer halves the bench time without
     # touching the semantic contract.
-    index = ivf_fit(
+    assigned = ivf_fit(
         unit,
         n_clusters=n_clusters,
         id_col=id_col,
         vec_col=vec_col,
         max_iter=kmeans_max_iter,
-    )
-    assigned = index.assigned  # (neighbor_id, c_vec, c_norm, cell)
-    a = assigned.alias("a")
-    b = assigned.alias("b")
-    dropped = (
-        a.join(
-            b,
-            (F.col("a.cell") == F.col("b.cell"))
-            & (F.col("a.neighbor_id") < F.col("b.neighbor_id")),
-        )
-        .filter(
-            F.round(
-                _dot(F.col("a.c_vec"), F.col("b.c_vec"))
-                / (F.col("a.c_norm") * F.col("b.c_norm")),
-                6,
-            )
-            >= threshold
-        )
-        .select(F.col("b.neighbor_id").alias("neighbor_id"))
-        .distinct()
-    )
-    return (
-        assigned.join(dropped, "neighbor_id", "left_anti")
-        .select(
-            F.col("neighbor_id").alias(id_col),
-            F.col("cell").cast("long").alias("cell"),
-        )
+    ).assigned.withColumnRenamed("neighbor_id", "_id")
+    return _semdedup_keep(
+        assigned.filter(F.col("_n") != 0.0).select("_id", "cell"),
+        assigned.select("_id", "_v", "_n"),
+        threshold,
+        id_col,
+        multi_cell=False,
+        keep=assigned.select("_id", F.col("cell").cast("long").alias("cell")),
     )
 
 
@@ -426,29 +495,19 @@ def embedding_near_dups(
     """Embedding-cosine near-duplicate pairs (a_id < b_id) via SRP-bucket
     candidate join + exact cosine verify — near-identical vectors land in
     the same bucket with high probability."""
-    planes = _hyperplanes(dim, n_planes)
-    v = vectors.select(
-        F.col(id_col).alias("vid"),
-        F.col(vec_col).alias("vec"),
-        _norm(F.col(vec_col)).alias("nrm"),
-        srp_signature(F.col(vec_col), planes).alias("bucket"),
-    )
-    a = v.alias("a")
-    b = v.alias("b")
+    sig = srp_signature(F.col(vec_col), _hyperplanes(dim, n_planes))
+    v = _vecs(vectors, "vid", id_col, vec_col, sig.alias("bucket"))
     return (
-        a.join(
-            b,
+        v.alias("a")
+        .join(
+            v.alias("b"),
             (F.col("a.bucket") == F.col("b.bucket"))
             & (F.col("a.vid") < F.col("b.vid")),
         )
         .select(
             F.col("a.vid").alias("a_id"),
             F.col("b.vid").alias("b_id"),
-            F.round(
-                _dot(F.col("a.vec"), F.col("b.vec"))
-                / (F.col("a.nrm") * F.col("b.nrm")),
-                6,
-            ).alias("cosine_sim"),
+            _cosine6("a", "b").alias("cosine_sim"),
         )
         .filter(F.col("cosine_sim") >= threshold)
     )
@@ -888,37 +947,18 @@ def ivf_probe_fixed(
         .filter(F.col("_rn") <= n_probe)
         .select(F.col("_id").alias("query_id"), "cell")
     )
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("q_vec"),
-        _norm(F.col(vec_col)).alias("q_norm"),
+    cand = (
+        probed.join(assigned, "cell")
+        .select("query_id", "neighbor_id")
+        .filter(F.col("query_id") != F.col("neighbor_id"))
     )
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("c_vec"),
-        _norm(F.col(vec_col)).alias("c_norm"),
-    )
-    cand = probed.join(assigned, "cell").select("query_id", "neighbor_id")
-    scored = (
-        cand.filter(F.col("query_id") != F.col("neighbor_id"))
-        .join(F.broadcast(q), "query_id")
-        .join(c, "neighbor_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(
-                _dot(F.col("q_vec"), F.col("c_vec"))
-                / (F.col("q_norm") * F.col("c_norm")),
-                6,
-            ).alias("cosine_sim"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine_sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
+    return _topk(
+        _scored(
+            cand,
+            _vecs(queries, "query_id", id_col, vec_col),
+            _vecs(corpus, "neighbor_id", id_col, vec_col),
+        ),
+        k,
     )
 
 
@@ -931,30 +971,19 @@ def semantic_dedup_fixed(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """Value-checked twin of ``semantic_dedup``'s deterministic machinery
-    (VERDICT r06 item 6 — the recipe that turned PQ/IVF green): the same
-    normalize → cluster-assign → within-cell cosine-dedup plan, but on
+    """Value-checked twin of ``semantic_dedup`` (VERDICT r06 item 6):
     FIXED hash-derived LCG centroids instead of a Lloyd fit, so every
     number is deterministic arithmetic and the whole query value-oracles.
-    ``semantic_dedup`` (the KMeans variant) stays rows-only beside it.
 
-    Same SemDeDup contract: cluster on L2-NORMALIZED vectors (scaled
-    copies of one direction co-cluster; zero vectors pass through
-    un-normalized), then within each cell drop every vector whose cosine
-    to a lower-id member is ≥ ``threshold``; min id survives. The pair
-    cosine runs on the RAW vectors (cosine is magnitude-invariant, and
-    raw-vector cosine is the engine-proven ``_cosine_sql`` arithmetic).
-
-    Output: kept (vec_id, cell). Scale shape: assignment is
-    ``ivf_cell_assignments`` at n_probe=1 — the exact-grid BLAS path
-    (round 10; cluster membership therefore lives on the 2^-20 grid,
-    mirrored by the quantized-centroid oracle); the within-cell pair
-    join is the only superlinear step, Σ|cell|² bounded by scaling
-    n_clusters √N-style exactly as in ``semantic_dedup``.
+    Cell assignment: each L2-normalized vector's nearest of
+    ``n_clusters`` grid-quantized centroids (``ivf_cell_assignments`` at
+    n_probe=1 — the exact-grid BLAS path, mirrored by the
+    quantized-centroid oracle); zero vectors sit in ``zcell``, the
+    centroid nearest the origin, and are kept. The ``_semdedup_keep``
+    skeleton verifies on the RAW vectors (cosine is magnitude-invariant).
+    Output: kept (vec_id, cell). Σ|cell|² is bounded by scaling
+    n_clusters √N-style (the ``semantic_dedup_sqrt`` query).
     """
-    spark = vectors.sparkSession
-    dv = F.col(vec_col).cast("array<double>")
-    norm = _norm(dv)
     # assignment via the exact-grid BLAS path (round 10 — the same
     # cost-model fix as ivf_cell_assignments: interpreted HOF distances
     # are ~10 µs each, so N × n_clusters of them dominate the tier).
@@ -967,49 +996,85 @@ def semantic_dedup_fixed(
         range(n_clusters),
         key=lambda i: (sum(w * w for w in cq[i]), i),
     )
-    assigned = ivf_cell_assignments(
-        vectors, n_clusters, n_probe=1, dim=dim, seed=seed,
-        id_col=id_col, vec_col=vec_col,
-    ).withColumnRenamed(id_col, "_id").unionByName(
-        vectors.filter(norm == 0.0).select(
-            F.col(id_col).alias("_id"),
-            F.lit(zcell).cast("int").alias("cell"),
+    vecs = _vecs(vectors, "_id", id_col, vec_col)
+    # materialize once: the assignment feeds BOTH sides of the pair
+    # self-join AND the keep anti-join — without truncation the
+    # broadcast-argmin assignment pipeline re-executes three times
+    # (measured 13.1 → 1.9 s at sf0.1)
+    cells = (
+        ivf_cell_assignments(
+            vectors, n_clusters, n_probe=1, dim=dim, seed=seed,
+            id_col=id_col, vec_col=vec_col,
         )
+        .withColumnRenamed(id_col, "_id")
+        .localCheckpoint()
     )
-    raw = vectors.select(
-        F.col(id_col).alias("_id"), dv.alias("_raw"), _norm(dv).alias("_n")
+    zeros = vecs.filter(F.col("_n") == 0.0).select(
+        "_id", F.lit(zcell).cast("int").alias("cell")
     )
-    # materialize once: the relation feeds BOTH sides of the self-join
-    # AND the final anti-join — without truncation the broadcast-argmin
-    # assignment pipeline re-executes three times (measured 13.1 → 1.9 s
-    # at sf0.1)
-    withv = assigned.join(raw, "_id").localCheckpoint()
-    a, b = withv.alias("a"), withv.alias("b")
-    dropped = (
-        a.join(
-            b,
-            (F.col("a.cell") == F.col("b.cell"))
-            & (F.col("a._id") < F.col("b._id")),
+    return _semdedup_keep(
+        cells,
+        vecs,
+        threshold,
+        id_col,
+        multi_cell=False,
+        keep=cells.unionByName(zeros).select(
+            "_id", F.col("cell").cast("long").alias("cell")
+        ),
+    )
+
+
+def _srp_bands(
+    df: DataFrame,
+    id_as: str,
+    band_planes: list[list[list[float]]],
+    id_col: str,
+    vec_col: str,
+) -> DataFrame:
+    """(``id_as``, band_idx, bucket): one row per band of every NON-ZERO
+    vector, band b's bucket being the SRP signature over
+    ``band_planes[b]``. Zero vectors have no direction and are never
+    banded. Signatures are a codegen projection on the scan."""
+    dv = F.col(vec_col).cast("array<double>")
+    sigs = F.array(*[srp_signature(dv, planes) for planes in band_planes])
+    return (
+        df.select(
+            F.col(id_col).alias(id_as),
+            _norm(dv).alias("_n"),
+            F.posexplode(sigs).alias("band_idx", "bucket"),
         )
-        .filter(
-            # NULL (→ filter false) when either side is a zero vector:
-            # cosine against a zero vector is undefined and never dedups;
-            # the guard also keeps ANSI mode from raising DIVIDE_BY_ZERO
-            F.when(
-                (F.col("a._n") != 0.0) & (F.col("b._n") != 0.0),
-                F.round(
-                    _dot(F.col("a._raw"), F.col("b._raw"))
-                    / (F.col("a._n") * F.col("b._n")),
-                    6,
-                ),
-            )
-            >= threshold
+        .filter(F.col("_n") != 0.0)
+        .select(id_as, "band_idx", "bucket")
+    )
+
+
+def _srp_candidates(
+    queries: DataFrame,
+    corpus: DataFrame,
+    n_planes: int,
+    n_bands: int,
+    dim: int,
+    id_col: str,
+    vec_col: str,
+) -> DataFrame:
+    """(query_id, neighbor_id) pairs sharing at least one of ``n_bands``
+    SRP band buckets (band = ``n_planes/n_bands`` sign bits of one seeded
+    plane set): broadcast query signatures, (band_idx, bucket) equi-join —
+    never all-pairs. Σ candidates per query is bounded by bucket
+    occupancy (≈ N/2^(planes/bands) per band)."""
+    assert n_planes % n_bands == 0, "bands must tile the plane set"
+    rows = n_planes // n_bands
+    planes = _hyperplanes(dim, n_planes)
+    bands = [planes[b * rows : (b + 1) * rows] for b in range(n_bands)]
+    return (
+        F.broadcast(_srp_bands(queries, "query_id", bands, id_col, vec_col))
+        .join(
+            _srp_bands(corpus, "neighbor_id", bands, id_col, vec_col),
+            ["band_idx", "bucket"],
         )
-        .select(F.col("b._id").alias("_id"))
+        .filter(F.col("query_id") != F.col("neighbor_id"))
+        .select("query_id", "neighbor_id")
         .distinct()
-    )
-    return withv.join(dropped, "_id", "left_anti").select(
-        F.col("_id").alias(id_col), F.col("cell").cast("long").alias("cell")
     )
 
 
@@ -1025,71 +1090,21 @@ def srp_banded_topk(
 ) -> DataFrame:
     """Banded-SRP approximate top-k: candidates share at least one of
     ``n_bands`` sign-random-projection band buckets with the query
-    (each band = ``n_planes/n_bands`` sign bits), then exact 6-dp cosine
-    re-rank — the higher-recall/more-candidates point on the SRP curve
-    vs ``lsh_topk``'s full-signature bucket match (recall measured side
-    by side in ``ann_recall_report``). Same seeded hyperplane constants
-    and scale shape as ``hard_negative_mining_ann``: broadcast query
-    signatures, (band_idx, bucket) equi-join, never all-pairs."""
-    assert n_planes % n_bands == 0, "bands must tile the plane set"
-    rows = n_planes // n_bands
-    planes = _hyperplanes(dim, n_planes)
-
-    def _banded(df: DataFrame, role: str) -> DataFrame:
-        dv = F.col(vec_col).cast("array<double>")
-        sigs = F.array(
-            *[
-                srp_signature(dv, planes[b * rows : (b + 1) * rows])
-                for b in range(n_bands)
-            ]
-        )
-        return (
-            df.select(
-                F.col(id_col).alias(f"{role}_id"),
-                _norm(dv).alias(f"{role}_norm"),
-                F.posexplode(sigs).alias("band_idx", "bucket"),
-            )
-            .filter(F.col(f"{role}_norm") != 0.0)
-            .select(f"{role}_id", "band_idx", "bucket")
-        )
-
-    cand = (
-        F.broadcast(_banded(queries, "q"))
-        .join(_banded(corpus, "c"), ["band_idx", "bucket"])
-        .filter(F.col("q_id") != F.col("c_id"))
-        .select(
-            F.col("q_id").alias("query_id"),
-            F.col("c_id").alias("neighbor_id"),
-        )
-        .distinct()
+    (``_srp_candidates``), then exact 6-dp cosine re-rank — the
+    higher-recall/more-candidates point on the SRP curve vs
+    ``lsh_topk``'s full-signature bucket match (recall measured side by
+    side in ``ann_recall_report``). Same seeded hyperplane constants and
+    candidate path as ``hard_negative_mining_ann``."""
+    cand = _srp_candidates(
+        queries, corpus, n_planes, n_bands, dim, id_col, vec_col
     )
-    qv = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).cast("array<double>").alias("_qv"),
-        _norm(F.col(vec_col).cast("array<double>")).alias("_qn"),
-    )
-    cv = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).cast("array<double>").alias("_cv"),
-        _norm(F.col(vec_col).cast("array<double>")).alias("_cn"),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine_sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        cand.join(F.broadcast(qv), "query_id")
-        .join(cv, "neighbor_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(
-                _dot(F.col("_qv"), F.col("_cv"))
-                / (F.col("_qn") * F.col("_cn")),
-                6,
-            ).alias("cosine_sim"),
-        )
-        .withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
+    return _topk(
+        _scored(
+            cand,
+            _vecs(queries, "query_id", id_col, vec_col),
+            _vecs(corpus, "neighbor_id", id_col, vec_col),
+        ),
+        k,
     )
 
 
@@ -1182,15 +1197,11 @@ def semantic_dedup_ann(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """SemDeDup's keep/drop decision on ANN candidates (VERDICT r08 item
-    2): the sublinear tier that replaces the within-cell all-pairs stage.
-    Candidate pairs come from BANDED SRP buckets — two vectors are
-    compared only if they share at least one of the ``n_bands`` sign-
-    random-projection band buckets — then the identical exact-cosine
-    keep/drop contract runs on the candidate set: drop every vector whose
-    6-dp cosine to a lower-id candidate is ≥ ``threshold``; min id
-    survives (the same min-id-survivor rule as ``semantic_dedup_fixed``,
-    with SRP-candidate recall in place of the cell partition).
+    """SemDeDup on banded-SRP cells (VERDICT r08 item 2): the sublinear
+    tier. Cell assignment: one cell per (band, bucket) — two vectors are
+    compared only if they share at least one of the ``n_bands``
+    sign-random-projection band buckets; the ``_semdedup_keep`` skeleton
+    then applies the shared keep/drop rule on the raw vectors.
 
     Scale design (the law that keeps this sublinear): SRP buckets are a
     FIXED 2^bits space, so at constant ``bits`` occupancy grows linearly
@@ -1205,74 +1216,28 @@ def semantic_dedup_ann(
     full ``n_bands × max_bits`` plane table as literals and slice.
 
     Fully value-oracled: seeded-LCG hyperplane literals, integer sign
-    packing, 6-dp IEEE cosine. Zero vectors are never banded (cosine
-    against them is undefined, they can neither drop nor be dropped) and
-    pass through kept.
+    packing, 6-dp IEEE cosine. Zero vectors are never banded and pass
+    through kept.
 
     Output: kept (vec_id). 100 TB shape: signatures are a codegen
-    projection on the scan; the candidate generator is a (band_idx,
-    bucket) equi-join; Σ pairs ≈ N × target_bucket — never all-pairs.
+    projection on the scan; Σ pairs ≈ N × target_bucket — never
+    all-pairs.
     """
     import math
 
     n = vectors.count()
     bits = min(max_bits, max(4, math.ceil(math.log2(max(n, 2) / float(target_bucket)))))
     all_planes = _hyperplanes(dim, n_bands * max_bits)
-
-    dv = F.col(vec_col).cast("array<double>")
-    sigs = F.array(
-        *[
-            srp_signature(dv, all_planes[b * max_bits : b * max_bits + bits])
-            for b in range(n_bands)
-        ]
+    bands = [all_planes[b * max_bits : b * max_bits + bits] for b in range(n_bands)]
+    cells = _srp_bands(vectors, "_id", bands, id_col, vec_col).select(
+        "_id", F.struct("band_idx", "bucket").alias("cell")
     )
-    banded = (
-        vectors.select(
-            F.col(id_col).alias("_id"),
-            _norm(dv).alias("_n"),
-            F.posexplode(sigs).alias("band_idx", "bucket"),
-        )
-        .filter(F.col("_n") != 0.0)
-        .select("_id", "band_idx", "bucket")
-    )
-    cand = (
-        banded.alias("a")
-        .join(
-            banded.alias("b"),
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a._id") < F.col("b._id")),
-        )
-        .select(
-            F.col("a._id").alias("id_a"), F.col("b._id").alias("id_b")
-        )
-        .distinct()
-    )
-    raw = vectors.select(
-        F.col(id_col).alias("_id"), dv.alias("_raw"), _norm(dv).alias("_n")
-    )
-    dropped = (
-        cand.join(raw.select(F.col("_id").alias("id_a"),
-                             F.col("_raw").alias("_ra"),
-                             F.col("_n").alias("_na")), "id_a")
-        .join(raw.select(F.col("_id").alias("id_b"),
-                         F.col("_raw").alias("_rb"),
-                         F.col("_n").alias("_nb")), "id_b")
-        .filter(
-            F.round(
-                _dot(F.col("_ra"), F.col("_rb"))
-                / (F.col("_na") * F.col("_nb")),
-                6,
-            )
-            >= threshold
-        )
-        .select(F.col("id_b").alias("_id"))
-        .distinct()
-    )
-    return (
-        vectors.select(F.col(id_col).alias("_id"))
-        .join(dropped, "_id", "left_anti")
-        .select(F.col("_id").alias(id_col))
+    return _semdedup_keep(
+        cells,
+        _vecs(vectors, "_id", id_col, vec_col),
+        threshold,
+        id_col,
+        multi_cell=True,
     )
 
 
@@ -1412,23 +1377,21 @@ def semantic_dedup_ivf(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """SemDeDup keep/drop on MULTI-PROBE IVF-cell candidates — the
-    high-recall sublinear tier (VERDICT r09 item 2: the banded-SRP
-    candidate generator of ``semantic_dedup_ann`` measures 0.12-0.36
-    drop-set recall at the registered threshold because a cosine-0.45
-    duplicate pair sits 63° apart, far wider than SRP sign-agreement
-    reaches; IVF cells probed at depth catch them — measured pair recall
-    0.95-1.00 at (cells=N/16, probe=8) vs the exact all-pairs drop set,
-    see ``ann_recall_report``).
+    """SemDeDup on MULTI-PROBE IVF cells — the high-recall sublinear
+    tier (VERDICT r09 item 2: the banded-SRP candidate generator of
+    ``semantic_dedup_ann`` measures 0.12-0.36 drop-set recall at the
+    registered threshold because a cosine-0.45 duplicate pair sits 63°
+    apart, far wider than SRP sign-agreement reaches; IVF cells probed
+    at depth catch them — measured pair recall 0.95-1.00 at
+    (cells=N/16, probe=8) vs the exact all-pairs drop set, see
+    ``ann_recall_report``).
 
-    Candidates: each non-zero vector is L2-normalized and assigned to its
-    ``n_probe`` nearest of ``n_cells`` fixed hash-derived unit centroids
-    (the ``ivf_probe_fixed`` multi-probe move applied corpus-side, not
-    just query-side); two vectors are compared iff they share a probed
-    cell. The exact-cosine keep/drop contract then runs on the candidate
-    set: drop every vector whose 6-dp cosine to a lower-id candidate is
-    ≥ ``threshold``; min id survives (same contract as
-    ``semantic_dedup_fixed`` / ``semantic_dedup_ann``).
+    Cell assignment: each non-zero vector is L2-normalized and assigned
+    to its ``n_probe`` nearest of ``n_cells`` fixed hash-derived unit
+    centroids (the ``ivf_probe_fixed`` multi-probe move applied
+    corpus-side); the ``_semdedup_keep`` skeleton compares two vectors
+    iff they share a probed cell. This is ``semantic_dedup_ivf_refit``
+    with no Lloyd step.
 
     Scale design: ``n_cells = clamp(ceil(N / target_occ), min_cells,
     max_cells)`` holds expected cell occupancy ≈ ``target_occ``, so
@@ -1436,9 +1399,7 @@ def semantic_dedup_ivf(
     cap is not binding (the literal centroid table is what caps it here;
     at real scale the centroids come from the KMeans fit the rows-only
     ``semantic_dedup`` tier runs, exactly as ``ivf_topk`` is the fitted
-    twin of ``ivf_probe_fixed``). The assignment is
-    ``ivf_cell_assignments``'s broadcast-centroid top-n_probe aggregate;
-    the remaining shuffles are the (cell) equi-join and the distinct.
+    twin of ``ivf_probe_fixed``).
 
     Fully value-oracled: prefix-stable LCG unit centroids (cell i's
     components are positions [i*dim, (i+1)*dim) of one seeded stream, so
@@ -1448,89 +1409,18 @@ def semantic_dedup_ivf(
 
     Output: kept (vec_id).
     """
-    import math
-
-    n = vectors.count()
-    n_cells = min(max_cells, max(min_cells, math.ceil(n / float(target_occ))))
-    # materialize once: the (id, cell) relation is tiny (N × n_probe ints)
-    # but its producer — the n_cells × dim HOF distance projection — is
-    # the query's most expensive stage, and the pair self-join would
-    # otherwise execute it TWICE (measured 2.2 s/side at sf0.1; the same
-    # truncation move as semantic_dedup_fixed's withv)
-    assigned = (
-        ivf_cell_assignments(
-            vectors, n_cells, n_probe, dim, seed, id_col, vec_col
-        )
-        .withColumnRenamed(id_col, "_id")
-        .localCheckpoint()
-    )
-    return _keep_from_cell_assignments(
-        vectors, assigned, threshold, id_col, vec_col
-    )
-
-
-def _keep_from_cell_assignments(
-    vectors: DataFrame,
-    assigned: DataFrame,
-    threshold: float,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Shared SemDeDup keep/drop tail over a (``_id``, cell) assignment
-    relation (semantic_dedup_ivf and semantic_dedup_ivf_refit differ only
-    in HOW cells are assigned): cell-sharing candidate pairs → exact
-    6-dp-cosine drop rule (min id survives) → kept ids."""
-    dv = F.col(vec_col).cast("array<double>")
-    # distinct BEFORE the vector joins: multi-probe duplicates a pair up
-    # to n_probe×, and the id-only distinct is a cheap narrow shuffle,
-    # while evaluating the 64-dim cosine on duplicated (and cell-skewed)
-    # pairs is the expensive path (measured: carrying the vectors into
-    # the pair join instead = 16.7 s vs 7.7 s at sf0.1)
-    cand = (
-        assigned.alias("a")
-        .join(
-            assigned.alias("b"),
-            (F.col("a.cell") == F.col("b.cell"))
-            & (F.col("a._id") < F.col("b._id")),
-        )
-        .select(F.col("a._id").alias("id_a"), F.col("b._id").alias("id_b"))
-        .distinct()
-    )
-    raw = vectors.select(
-        F.col(id_col).alias("_id"), dv.alias("_raw"), _norm(dv).alias("_n")
-    )
-    dropped = (
-        cand.join(
-            raw.select(
-                F.col("_id").alias("id_a"),
-                F.col("_raw").alias("_ra"),
-                F.col("_n").alias("_na"),
-            ),
-            "id_a",
-        )
-        .join(
-            raw.select(
-                F.col("_id").alias("id_b"),
-                F.col("_raw").alias("_rb"),
-                F.col("_n").alias("_nb"),
-            ),
-            "id_b",
-        )
-        .filter(
-            F.round(
-                _dot(F.col("_ra"), F.col("_rb"))
-                / (F.col("_na") * F.col("_nb")),
-                6,
-            )
-            >= threshold
-        )
-        .select(F.col("id_b").alias("_id"))
-        .distinct()
-    )
-    return (
-        vectors.select(F.col(id_col).alias("_id"))
-        .join(dropped, "_id", "left_anti")
-        .select(F.col("_id").alias(id_col))
+    return semantic_dedup_ivf_refit(
+        vectors,
+        threshold,
+        target_occ,
+        n_probe,
+        max_cells,
+        min_cells,
+        dim,
+        seed,
+        lloyd_steps=0,
+        id_col=id_col,
+        vec_col=vec_col,
     )
 
 
@@ -1615,10 +1505,13 @@ def semantic_dedup_ivf_refit(
     pass; a deployment picks its tier with exactly the
     ``semantic_dedup_recall`` audit this engine registers.
 
-    Same keep/drop contract and occupancy-law cell count as
-    ``semantic_dedup_ivf``; identical oracle discipline — the Lloyd means
-    are exact-grid order-independent sums (``ivf_refit_centroids``), so
-    the full pipeline stays value-hash-checkable against the SQL mirror.
+    Cell assignment: ``ivf_cell_assignments`` against the refit
+    centroids, cells = clamp(ceil(N / target_occ), min_cells, max_cells)
+    (the occupancy law of ``semantic_dedup_ivf``, which is this tier at
+    ``lloyd_steps=0``); the ``_semdedup_keep`` skeleton does the rest.
+    Identical oracle discipline — the Lloyd means are exact-grid
+    order-independent sums (``ivf_refit_centroids``), so the full
+    pipeline stays value-hash-checkable against the SQL mirror.
 
     Output: kept (vec_id)."""
     import math
@@ -1628,7 +1521,11 @@ def semantic_dedup_ivf_refit(
     cents = quantized_unit_centroids(n_cells, dim, seed)
     for _ in range(lloyd_steps):
         cents = ivf_refit_centroids(vectors, cents, dim, id_col, vec_col)
-    assigned = (
+    # materialize once: the (id, cell) relation is tiny (N × n_probe ints)
+    # but its producer — the n_cells × dim distance projection — is the
+    # query's most expensive stage, and the pair self-join would otherwise
+    # execute it TWICE (measured 2.2 s/side at sf0.1)
+    cells = (
         ivf_cell_assignments(
             vectors, n_cells, n_probe, dim, seed, id_col, vec_col,
             centroids=cents,
@@ -1636,8 +1533,12 @@ def semantic_dedup_ivf_refit(
         .withColumnRenamed(id_col, "_id")
         .localCheckpoint()
     )
-    return _keep_from_cell_assignments(
-        vectors, assigned, threshold, id_col, vec_col
+    return _semdedup_keep(
+        cells,
+        _vecs(vectors, "_id", id_col, vec_col),
+        threshold,
+        id_col,
+        multi_cell=True,
     )
 
 
@@ -1736,47 +1637,10 @@ def incremental_semantic_pairs(
         )
     )
     cand = nn.unionByName(ns).distinct()
-    dv = F.col(vec_col).cast("array<double>")
-    allv = (
-        new_vecs.select(
-            F.col(id_col).alias("_id"), dv.alias("_raw"), _norm(dv).alias("_n")
-        )
-        .unionByName(
-            store_vecs.select(
-                F.col(id_col).alias("_id"),
-                dv.alias("_raw"),
-                _norm(dv).alias("_n"),
-            )
-        )
+    allv = _vecs(new_vecs, "_id", id_col, vec_col).unionByName(
+        _vecs(store_vecs, "_id", id_col, vec_col)
     )
-    return (
-        cand.join(
-            allv.select(
-                F.col("_id").alias("id_a"),
-                F.col("_raw").alias("_ra"),
-                F.col("_n").alias("_na"),
-            ),
-            "id_a",
-        )
-        .join(
-            allv.select(
-                F.col("_id").alias("id_b"),
-                F.col("_raw").alias("_rb"),
-                F.col("_n").alias("_nb"),
-            ),
-            "id_b",
-        )
-        .withColumn(
-            "cosine",
-            F.round(
-                _dot(F.col("_ra"), F.col("_rb"))
-                / (F.col("_na") * F.col("_nb")),
-                6,
-            ),
-        )
-        .filter(F.col("cosine") >= threshold)
-        .select("id_a", "id_b", "cosine")
-    )
+    return _verified_pairs(cand, allv, threshold)
 
 
 def hard_negative_mining(
@@ -1811,43 +1675,42 @@ def hard_negative_mining(
     # negative — and under the session's default ANSI mode the unguarded
     # division would raise DIVIDE_BY_ZERO (the semantic_dedup_fixed
     # lesson; mirrored in the SQL oracle)
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).cast("array<double>").alias("q_vec"),
-        _norm(F.col(vec_col).cast("array<double>")).alias("q_norm"),
-        F.col(label_col).alias("q_label"),
-    ).filter(F.col("q_norm") != 0.0)
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).cast("array<double>").alias("c_vec"),
-        _norm(F.col(vec_col).cast("array<double>")).alias("c_norm"),
-        F.col(label_col).alias("c_label"),
-    ).filter(F.col("c_norm") != 0.0)
+    q = _vecs(
+        queries, "query_id", id_col, vec_col, F.col(label_col).alias("q_label")
+    ).filter(F.col("_n") != 0.0)
+    c = _vecs(
+        corpus, "neighbor_id", id_col, vec_col, F.col(label_col).alias("c_label")
+    ).filter(F.col("_n") != 0.0)
     scored = (
-        F.broadcast(q)
-        .join(c, F.col("query_id") != F.col("neighbor_id"))
+        F.broadcast(q.alias("q"))
+        .join(c.alias("c"), F.col("query_id") != F.col("neighbor_id"))
         .select(
             "query_id",
-            F.when(F.col("q_label") == F.col("c_label"), F.lit("pos"))
-            .otherwise(F.lit("neg"))
-            .alias("role"),
             "neighbor_id",
-            F.round(
-                _dot(F.col("q_vec"), F.col("c_vec"))
-                / (F.col("q_norm") * F.col("c_norm")),
-                6,
-            ).alias("cosine_sim"),
+            "q_label",
+            "c_label",
+            _cosine6("q", "c").alias("cosine_sim"),
         )
+    )
+    return _rank_roles(scored, n_pos, n_neg)
+
+
+def _rank_roles(scored: DataFrame, n_pos: int, n_neg: int) -> DataFrame:
+    """Hard-negative ranking over scored (query_id, neighbor_id, q_label,
+    c_label, cosine_sim) pairs: role 'pos' (same label) / 'neg', top
+    ``n_pos`` / ``n_neg`` per (query, role) by (sim DESC, neighbor_id
+    ASC)."""
+    role = F.when(F.col("q_label") == F.col("c_label"), F.lit("pos")).otherwise(
+        F.lit("neg")
     )
     w = Window.partitionBy("query_id", "role").orderBy(
         F.col("cosine_sim").desc(), F.col("neighbor_id").asc()
     )
     return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
+        scored.withColumn("role", role)
+        .withColumn("rank", F.row_number().over(w).cast("long"))
         .filter(
-            (
-                (F.col("role") == "pos") & (F.col("rank") <= n_pos)
-            )
+            ((F.col("role") == "pos") & (F.col("rank") <= n_pos))
             | ((F.col("role") == "neg") & (F.col("rank") <= n_neg))
         )
         .select("query_id", "role", "rank", "neighbor_id", "cosine_sim")
@@ -1886,77 +1749,14 @@ def hard_negative_mining_ann(
     broadcast-sized query side — never all-pairs. Σ candidates per query
     is bounded by bucket occupancy (≈ N/2^(planes/bands) per band).
     """
-    assert n_planes % n_bands == 0, "bands must tile the plane set"
-    rows = n_planes // n_bands
-    planes = _hyperplanes(dim, n_planes)
-
-    def _banded(df: DataFrame, role: str) -> DataFrame:
-        dv = F.col(vec_col).cast("array<double>")
-        sigs = F.array(
-            *[
-                srp_signature(dv, planes[b * rows : (b + 1) * rows])
-                for b in range(n_bands)
-            ]
-        )
-        return (
-            df.select(
-                F.col(id_col).alias(f"{role}_id"),
-                _norm(dv).alias(f"{role}_norm"),
-                F.posexplode(sigs).alias("band_idx", "bucket"),
-            )
-            .filter(F.col(f"{role}_norm") != 0.0)
-            .select(f"{role}_id", "band_idx", "bucket")
-        )
-
-    cand = (
-        F.broadcast(_banded(queries, "q"))
-        .join(_banded(corpus, "c"), ["band_idx", "bucket"])
-        .filter(F.col("q_id") != F.col("c_id"))
-        .select(
-            F.col("q_id").alias("query_id"),
-            F.col("c_id").alias("neighbor_id"),
-        )
-        .distinct()
+    q_label = F.col(label_col).alias("q_label")
+    c_label = F.col(label_col).alias("c_label")
+    scored = _scored(
+        _srp_candidates(queries, corpus, n_planes, n_bands, dim, id_col, vec_col),
+        _vecs(queries, "query_id", id_col, vec_col, q_label),
+        _vecs(corpus, "neighbor_id", id_col, vec_col, c_label),
     )
-    qv = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).cast("array<double>").alias("q_vec"),
-        _norm(F.col(vec_col).cast("array<double>")).alias("q_norm"),
-        F.col(label_col).alias("q_label"),
-    )
-    cv = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).cast("array<double>").alias("c_vec"),
-        _norm(F.col(vec_col).cast("array<double>")).alias("c_norm"),
-        F.col(label_col).alias("c_label"),
-    )
-    scored = (
-        cand.join(F.broadcast(qv), "query_id")
-        .join(cv, "neighbor_id")
-        .select(
-            "query_id",
-            F.when(F.col("q_label") == F.col("c_label"), F.lit("pos"))
-            .otherwise(F.lit("neg"))
-            .alias("role"),
-            "neighbor_id",
-            F.round(
-                _dot(F.col("q_vec"), F.col("c_vec"))
-                / (F.col("q_norm") * F.col("c_norm")),
-                6,
-            ).alias("cosine_sim"),
-        )
-    )
-    w = Window.partitionBy("query_id", "role").orderBy(
-        F.col("cosine_sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(
-            ((F.col("role") == "pos") & (F.col("rank") <= n_pos))
-            | ((F.col("role") == "neg") & (F.col("rank") <= n_neg))
-        )
-        .select("query_id", "role", "rank", "neighbor_id", "cosine_sim")
-    )
+    return _rank_roles(scored, n_pos, n_neg)
 
 
 def quantize_embeddings(

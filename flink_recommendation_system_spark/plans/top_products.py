@@ -40,6 +40,12 @@ def top_products(
     result set is stable across partitionings (the reference's is not).
     ``avg_rating`` is rounded to 6 decimals to make the oracle hash robust
     to summation order.
+
+    The ONE ranking policy: the continuous refresh
+    (``streaming.model_refresh``) runs this same plan on the review
+    stream. A NULL rating counts as a review but not in the average; a
+    product whose ratings are all NULL averages to NULL (no division, so
+    ANSI-safe) and ranks last.
     """
     return (
         reviews.groupBy("product_id")

@@ -2,14 +2,16 @@
 
 The reference refreshes `topProducts` only when someone re-runs the batch
 job (ProductReviewAggregation.java:24-61). Structured Streaming can keep
-the same model continuously fresh: a streaming groupBy maintains per-product
-sum/count state, and every micro-batch republishes the current top-k via
-``foreachBatch`` overwrite — the speed layer (which re-reads the model per
-batch, streaming/pipeline.py) then serves it immediately.
+the same model continuously fresh: the stream runs the batch layer's own
+``top_products`` plan as a complete-mode streaming aggregation, and every
+micro-batch republishes the current top-k via ``foreachBatch`` — the
+speed layer (which re-reads the model per batch, streaming/pipeline.py)
+then serves it immediately. One plan for both paths means the stream
+ranks exactly as the batch layer does, NULL ratings included.
 
-Scale notes: state is (product → sum, count) — bounded by product
+Scale notes: state is the per-product average/count — bounded by product
 cardinality, not stream length; the top-k is computed from the aggregated
-state (tiny) each batch, and overwrite-on-publish keeps readers atomic
+state (tiny) each batch, and stage-and-swap publish keeps readers atomic
 (same contract as S7).
 """
 
@@ -18,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..plans.top_products import MIN_REVIEWS, TOP_PRODUCTS_K
+from ..plans.top_products import MIN_REVIEWS, TOP_PRODUCTS_K, top_products
 
 
 def start_top_products_refresh(
@@ -30,44 +32,28 @@ def start_top_products_refresh(
 ):
     """Continuously maintain the `top_products` model from a review stream.
 
-    Uses a complete-mode streaming aggregation (running sum/count per
-    product) and republishes the current top-k parquet model every
-    micro-batch. Returns the StreamingQuery.
+    Runs ``top_products`` on the stream in complete output mode and
+    republishes the current top-k parquet model every micro-batch.
+    Returns the StreamingQuery.
     """
-    agg = reviews_stream.groupBy("product_id").agg(
-        F.sum("rating").alias("rating_sum"),
-        F.count(F.lit(1)).alias("review_cnt"),
-    )
 
-    def publish(batch: DataFrame, batch_id: int) -> None:
-        top = (
-            batch.filter(F.col("review_cnt") > min_reviews)
-            .select(
-                "product_id",
-                F.round(F.col("rating_sum") / F.col("review_cnt"), 6).alias(
-                    "avg_rating"
-                ),
-                "review_cnt",
-            )
-            .orderBy(F.col("avg_rating").desc(), F.col("product_id").asc())
-            .limit(k)
-        )
+    def publish(top: DataFrame, batch_id: int) -> None:
         # stage-and-swap, NOT a plain overwrite: the speed layer reads
         # model_path concurrently every micro-batch, and mode("overwrite")
         # deletes-then-writes — a concurrent read lands on a partial or
         # empty model (or dies on the missing path). The swap shrinks the
         # reader-visible window to two renames; readers pair it with
         # read_parquet_retry for the residual microseconds.
-        from ..sources.warehouse import heal_staged_swap, staged_swap
+        from ..sources.warehouse import staged_swap
 
-        heal_staged_swap(model_path)
         staged_swap(
             lambda staging: top.write.mode("overwrite").parquet(staging),
             model_path,
         )
 
     return (
-        agg.writeStream.outputMode("complete")
+        top_products(reviews_stream, k, min_reviews)
+        .writeStream.outputMode("complete")
         .foreachBatch(publish)
         .option("checkpointLocation", checkpoint_dir)
         .start()

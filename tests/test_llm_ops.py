@@ -5,6 +5,9 @@ values."""
 
 from __future__ import annotations
 
+import math
+
+import pytest
 from pyspark.sql import functions as F
 
 from flink_recommendation_system_spark.operators import dedup as D
@@ -786,6 +789,53 @@ def test_aggressive_dedup_coarsens_verified_clusters(spark):
     }
     assert aggressive, "aggressive tier dropped the whole corpus"
     assert aggressive <= verified
+
+
+def _vec64(seed: float, scale: float = 1.0) -> list[float]:
+    return [scale * ((seed + j) % 7 - 3.0) for j in range(64)]
+
+
+# every SemDeDup tier, at the configuration its registered query uses
+# (semantic_dedup_sqrt is the fixed tier at ⌊√N⌋ cells)
+SEMDEDUP_TIERS = {
+    "semantic_dedup": lambda df: S.semantic_dedup(
+        df, n_clusters=2, threshold=0.99
+    ),
+    "semantic_dedup_fixed": lambda df: S.semantic_dedup_fixed(
+        df, n_clusters=4, threshold=0.99
+    ),
+    "semantic_dedup_sqrt": lambda df: S.semantic_dedup_fixed(
+        df, n_clusters=int(math.sqrt(df.count())), threshold=0.99
+    ),
+    "semantic_dedup_ann": lambda df: S.semantic_dedup_ann(df, threshold=0.99),
+    "semantic_dedup_ivf": lambda df: S.semantic_dedup_ivf(df, threshold=0.99),
+    "semantic_dedup_ivf_refit": lambda df: S.semantic_dedup_ivf_refit(
+        df, threshold=0.99
+    ),
+}
+
+
+@pytest.mark.parametrize("tier", sorted(SEMDEDUP_TIERS))
+def test_semdedup_tier_contract(spark, tier):
+    """The keep/drop contract every tier shares through the one skeleton:
+    exact and scaled copies of a direction drop and the group's min id
+    survives; distinct directions survive; a zero vector survives (cosine
+    against it is undefined, so it never drops and drops nothing)."""
+    one_hot = [[1.0 if j == k else 0.0 for j in range(64)] for k in range(3)]
+    rows = [
+        (1, _vec64(1.0)),
+        (2, _vec64(1.0)),        # exact duplicate of 1
+        (3, _vec64(1.0, 2.0)),   # scaled duplicates of 1 (same direction)
+        (4, _vec64(1.0, 0.5)),
+        (10, _vec64(2.3)),       # distinct directions
+        (20, one_hot[1]),
+        (21, one_hot[2]),
+        (22, [-x for x in one_hot[0]]),
+        (30, [0.0] * 64),        # zero vector
+    ]
+    vecs = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    kept = {r["vec_id"] for r in SEMDEDUP_TIERS[tier](vecs).collect()}
+    assert kept == {1, 10, 20, 21, 22, 30}
 
 
 def test_semantic_dedup_ann_invariants(spark):

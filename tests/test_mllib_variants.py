@@ -1,42 +1,12 @@
-"""MLlib-backed variants: invariants against the hand-rolled baselines."""
+"""MLlib ALS recommendations: shape, exclusions and determinism."""
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
-from flink_recommendation_system_spark.operators.mllib_lsh import (
-    brp_near_dups_mllib,
-    minhash_lsh_pairs_mllib,
-)
 from flink_recommendation_system_spark.plans.als_recommendations import (
     als_user_recommendations,
 )
-from flink_recommendation_system_spark.sources.tables import (
-    load_table,
-    reviews_from_events,
-)
+from flink_recommendation_system_spark.sources.tables import reviews_from_events
 from tests.conftest import SF0001
-
-
-def test_mllib_minhash_finds_planted_dups(spark):
-    docs = load_table(spark, SF0001, "documents").limit(15)
-    dup = docs.withColumn("doc_id", F.col("doc_id") + 10000)
-    pairs = minhash_lsh_pairs_mllib(docs.union(dup), threshold=0.2)
-    found = {(r["a_id"], r["b_id"]): r["jaccard_dist"] for r in pairs.collect()}
-    for d in docs.collect():
-        key = (d["doc_id"], d["doc_id"] + 10000)
-        assert key in found and found[key] == 0.0
-
-
-def test_mllib_brp_finds_planted_dups(spark):
-    emb = load_table(spark, SF0001, "embeddings").limit(100)
-    dup = emb.filter(F.col("vec_id") < 5).withColumn(
-        "vec_id", F.col("vec_id") + 10000
-    )
-    pairs = brp_near_dups_mllib(emb.union(dup), threshold=0.5)
-    found = {(r["a_id"], r["b_id"]): r["eucl_dist"] for r in pairs.collect()}
-    for i in range(5):
-        assert found.get((i, i + 10000)) == 0.0
 
 
 def test_als_recommendations_shape_and_exclusions(spark):

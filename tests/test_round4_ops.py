@@ -13,9 +13,6 @@ import math
 from pyspark.sql import functions as F
 
 from flink_recommendation_system_spark.operators.retrieval import bm25_topk
-from flink_recommendation_system_spark.operators.similarity import (
-    semantic_dedup,
-)
 from flink_recommendation_system_spark.operators.text import (
     chunk_documents,
     length_histogram,
@@ -181,32 +178,6 @@ def test_length_histogram_buckets(spark):
     assert out[0] == (0, 2, 5)
     assert out[1] == (100, 1, 1)
     assert out[19] == (1900, 1, 4)
-
-
-# --- semantic dedup ---------------------------------------------------------
-
-
-def test_semantic_dedup_collapses_planted_duplicates(spark):
-    # 3 planted copies of one vector + distinct far-apart vectors:
-    # min-id copy survives, the others drop, singletons all survive
-    base = [1.0, 0.0, 0.0, 0.0]
-    rows = [
-        (10, base),
-        (11, [x * 2.0 for x in base]),      # same direction → cos 1.0
-        (12, [x * 0.5 for x in base]),      # same direction → cos 1.0
-        (20, [0.0, 1.0, 0.0, 0.0]),
-        (21, [0.0, 0.0, 1.0, 0.0]),
-        (22, [0.0, 0.0, 0.0, 1.0]),
-    ]
-    vecs = spark.createDataFrame(rows, ["vec_id", "embedding"]).select(
-        "vec_id", F.col("embedding").cast("array<float>").alias("embedding")
-    )
-    kept = {
-        r.vec_id for r in semantic_dedup(vecs, n_clusters=2, threshold=0.99).collect()
-    }
-    assert 10 in kept
-    assert 11 not in kept and 12 not in kept
-    assert {20, 21, 22} <= kept
 
 
 # --- bigram LM scoring ------------------------------------------------------

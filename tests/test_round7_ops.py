@@ -159,38 +159,6 @@ def test_edit_distance_pairs_rejects_bad_dist(spark):
         edit_distance_pairs(df, "id", "s", max_dist=3)
 
 
-# --- fixed-centroid SemDeDup twin -----------------------------------------
-
-
-def test_semantic_dedup_fixed_invariants(spark):
-    """Planted exact/scaled duplicates collapse to the min id; singleton
-    directions survive; zero vectors survive (cosine undefined, never >=
-    threshold)."""
-    from flink_recommendation_system_spark.operators.similarity import (
-        semantic_dedup_fixed,
-    )
-
-    dim = 64
-
-    def vec(seed: float, scale: float = 1.0):
-        return [scale * ((seed + j) % 7 - 3.0) for j in range(dim)]
-
-    rows = [
-        (1, vec(1.0)),
-        (2, vec(1.0)),        # exact duplicate of 1
-        (3, vec(1.0, 2.5)),   # scaled duplicate of 1 (same direction)
-        (10, vec(2.3)),       # distinct direction
-        (20, [0.0] * dim),    # zero vector
-    ]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    kept = {
-        r["vec_id"]
-        for r in semantic_dedup_fixed(df, n_clusters=4, threshold=0.99).collect()
-    }
-    assert 1 in kept and 2 not in kept and 3 not in kept
-    assert 10 in kept and 20 in kept
-
-
 # --- k-truss ---------------------------------------------------------------
 
 

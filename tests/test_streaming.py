@@ -222,6 +222,43 @@ def test_streaming_top_products_refresh_converges_to_batch(spark, tmp_path):
     assert got == expected
 
 
+def test_streaming_top_products_refresh_null_ratings_match_batch(spark, tmp_path):
+    """NULL ratings reach both paths (an out-of-domain value loads as
+    NULL; a wire event without a usable ``review`` parses to NULL). The
+    continuous model must publish exactly the batch ``top_products`` rows
+    on the same reviews — including a product whose ratings are all NULL
+    — rather than averaging NULLs in as zeros."""
+    from flink_recommendation_system_spark.streaming.model_refresh import (
+        start_top_products_refresh,
+    )
+
+    base = reviews_from_events(spark, SF0001)
+    nulled = base.withColumn(
+        "rating",
+        F.when(
+            (F.col("user_id") + F.col("product_id")) % 3 == 0, F.lit(None)
+        ).otherwise(F.col("rating")),
+    )
+    all_null = spark.createDataFrame(
+        [(900000 + i, 999999, None, 1) for i in range(12)], base.schema
+    )
+    reviews = nulled.unionByName(all_null)
+    stream_dir = _write_stream_files(tmp_path, reviews, n_files=3)
+    model_path = str(tmp_path / "top_model")
+
+    stream = read_review_stream_json(spark, stream_dir, max_files_per_trigger=1)
+    q = start_top_products_refresh(
+        stream, model_path, str(tmp_path / "ckpt_model"), k=100
+    )
+    q.processAllAvailable()
+    q.stop()
+
+    got = {tuple(r) for r in spark.read.parquet(model_path).collect()}
+    expected = {tuple(r) for r in top_products(reviews, k=100).collect()}
+    assert (999999, None, 12) in expected
+    assert got == expected
+
+
 def test_streaming_upsert_refresh_converges_to_latest_per_key(spark, tmp_path):
     """Replaying a stream of keyed model updates through the MERGE
     publisher must leave exactly the latest (max-ts) row per key — across

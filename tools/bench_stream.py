@@ -147,6 +147,10 @@ def _assert_drain_complete(ckpt_dir: str, expect_files: int) -> int:
     paths: set[str] = set()
     for fname in os.listdir(src_log):
         fpath = os.path.join(src_log, fname)
+        # Hadoop writes a binary ``.<N>.crc`` checksum beside every log
+        # file; only the plain-text batch entries are read
+        if fname.startswith(".") or fname.endswith(".crc"):
+            continue
         if not os.path.isfile(fpath):
             continue
         with open(fpath) as fh:
